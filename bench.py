@@ -292,7 +292,7 @@ def main() -> None:
         return
 
     # Per-query protocol: 1 untimed warm-up + best of 2 timed passes.
-    # The r2→r3 controlled A/B (scripts/ab_bench.py, AB_BENCH.json) showed
+    # A paired r2-vs-r3 A/B in one session (BENCH.md, round 3) showed
     # the single-cold-pass protocol measured session/host noise, not the
     # engine: identical queries ran 2-4x slower on their first execution
     # of a session (JIT, Python-worker spin-up, page cache) and the

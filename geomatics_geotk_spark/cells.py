@@ -117,11 +117,6 @@ def _xy_of(cell: int) -> tuple[int, int, int]:
     return xi, yi, res
 
 
-def _cell_from_xy(xi: int, yi: int, res: int) -> int:
-    morton = _interleave_bits(np.array([xi], dtype=np.uint64), np.array([yi], dtype=np.uint64))[0]
-    return int((np.uint64(res) << np.uint64(_RES_SHIFT)) | morton) - (1 << 64) * 0
-
-
 def cells_covering(xmin, ymin, xmax, ymax, res: int) -> np.ndarray:
     """All cell ids at ``res`` intersecting an envelope (lon/lat degrees).
 

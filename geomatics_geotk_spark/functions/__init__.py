@@ -83,10 +83,6 @@ def bbox_intersects(a_xmin, a_ymin, a_xmax, a_ymax, b_xmin, b_ymin, b_xmax, b_ym
     return (a_xmin <= b_xmax) & (a_xmax >= b_xmin) & (a_ymin <= b_ymax) & (a_ymax >= b_ymin)
 
 
-def bbox_contains_point(xmin, ymin, xmax, ymax, x, y) -> Column:
-    return (x >= xmin) & (x <= xmax) & (y >= ymin) & (y <= ymax)
-
-
 # ---------------------------------------------------------------------------
 # Point-in-polygon as pure Column math (JVM higher-order functions)
 # ---------------------------------------------------------------------------

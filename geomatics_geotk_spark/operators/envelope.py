@@ -15,7 +15,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import (
-    antipode_lat,
     antipode_lon,
     envelope_to_kvp,
     round_down_2dp,
@@ -156,9 +155,3 @@ def with_envelope_gml_corners(df: DataFrame) -> DataFrame:
         )
     )
 
-
-def antipode_points(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """getAntipode per point row (Extents.java:421-431)."""
-    return df.withColumn("anti_lat", antipode_lat(F.col(lat_col))).withColumn(
-        "anti_lon", antipode_lon(F.col(lon_col))
-    )

@@ -9,8 +9,9 @@ Shape for 100 TB
 ----------------
 Candidate generation is pluggable: the built-in path broadcasts a
 dimension-sized observation table (weather stations, sensors — the
-realistic IDW source) and ranks with the salted two-phase top-k
-(``similarity._topk_per_query`` — never a one-task-per-doc window); for
+realistic IDW source) and ranks with one per-doc ``row_number() <= k``
+window (``similarity._topk_per_query``; its partial ``WindowGroupLimit``
+keeps any task from sorting a doc's whole candidate set); for
 observation tables too big to broadcast, pass ``neighbors=`` from
 ``knn.knn_join`` (cell-ring candidates) and this operator only does the
 weighting rollup, which reuses the ranking exchange.
@@ -36,8 +37,7 @@ from .similarity import _topk_per_query
 
 def idw_interpolate(docs: DataFrame, pois: DataFrame, k: int = 4,
                     value_col: str = "poi_value", id_col: str = "doc_id",
-                    poi_id_col: str = "poi_id", d_floor_m: float = 1.0,
-                    salts: int = 16) -> DataFrame:
+                    poi_id_col: str = "poi_id", d_floor_m: float = 1.0) -> DataFrame:
     """(doc_id, n_nbrs, idw_value, nearest_dist_m) per doc.
 
     docs: (doc_id, lon, lat); pois: (poi_id, poi_lon, poi_lat, value) —
@@ -52,7 +52,7 @@ def idw_interpolate(docs: DataFrame, pois: DataFrame, k: int = 4,
     )
     nbrs = _topk_per_query(
         scored, k, q_id_col=id_col, id_col=poi_id_col,
-        score_col="_neg_d", rank_col="rank", salts=salts,
+        score_col="_neg_d", rank_col="rank",
     ).drop("_neg_d")
     return idw_weight(nbrs, value_col=value_col, id_col=id_col,
                       d_floor_m=d_floor_m)

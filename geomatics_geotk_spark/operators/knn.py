@@ -165,21 +165,9 @@ def knn_join(
         "dist_m",
         geo_dist(F.col(lat_col), F.col(lon_col), F.col("poi_lat"), F.col("poi_lon")),
     )
-    # salted two-phase per-doc top-k (same exact pattern as the ANN
-    # family): each unresolved doc's candidate set is the WHOLE poi
-    # table, so a single per-doc window would sort it in one task; the
-    # phase-1 (doc, salt) cut bounds every window partition, and the
-    # result is provably identical for any salt count.
-    salt = F.pmod(F.xxhash64(F.col("poi_id").cast("string"), F.lit(17)), F.lit(32))
-    w1 = Window.partitionBy(id_col, "_salt").orderBy(
-        F.col("dist_m").asc(), F.col("poi_id").asc()
-    )
-    brute = (
-        scored.withColumn("_salt", salt)
-        .withColumn("_rk1", F.row_number().over(w1))
-        .where(F.col("_rk1") <= k)
-        .drop("_rk1", "_salt")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    # each unresolved doc's candidate set is the WHOLE poi table; the
+    # same per-doc window ``w`` bounds it, because Catalyst plans the
+    # ``<= k`` filter as a partial WindowGroupLimit before the exchange
+    # (at most k rows per doc per input partition) and a final one after
+    brute = scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
     return resolved.select(*out_cols).unionByName(brute.select(*out_cols))

@@ -36,37 +36,20 @@ def _safe_cos(num, den):
 
 
 def _topk_per_query(scored: DataFrame, k: int, q_id_col: str, id_col: str,
-                    score_col: str = "cosine", rank_col: str = "rank",
-                    salts: int = 16) -> DataFrame:
-    """Salted two-phase per-query top-k (EXACT, parallelism knob only).
+                    score_col: str = "cosine", rank_col: str = "rank") -> DataFrame:
+    """Exact per-query top-k: one ``row_number() OVER (PARTITION BY q_id
+    ORDER BY score desc, id asc) <= k`` window.
 
-    A single ``row_number() OVER (PARTITION BY q_id)`` funnels every
-    candidate of a query into ONE task — at 100 TB the int8 coarse pass
-    or an LSH candidate set per query is corpus-scale, so that window is
-    a straggler per query.  Phase 1 windows over ``(q_id, salt)``: any
-    member of the true per-query top-k sees, inside its own salt group,
-    only a SUBSET of the rows globally ranked above it, so its local
-    rank ≤ its global rank ≤ k and it survives the cut.  Phase 2's exact
-    window then sorts at most ``k·salts`` rows per query.  The result is
-    provably identical for ANY ``salts ≥ 1`` (asserted by
-    test_topk_salt_invariance); ordering is total — (score desc, id asc)
-    — so ranks are deterministic.  Same pattern as
-    ``text.stratified_topk`` (the engine's sampled top-k).
+    Ordering is total — (score desc, id asc) — so ranks are
+    deterministic.  Catalyst plans the ``<= k`` filter as a partial
+    ``WindowGroupLimit`` below the exchange and a final one above it, so
+    the shuffle carries at most k rows per query per input partition and
+    no task sorts a query's whole candidate set.  The partial limit only
+    exists for ``k <= spark.sql.optimizer.windowGroupLimitThreshold``
+    (1000 by default); the largest k any caller passes is 256.
     """
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    salt = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(17)), F.lit(salts))
-    staged = scored.withColumn("_tk_salt", salt)
-    w1 = Window.partitionBy(q_id_col, "_tk_salt").orderBy(*order)
-    survivors = (
-        staged.withColumn("_tk_rk", F.row_number().over(w1))
-        .where(F.col("_tk_rk") <= k)
-        .drop("_tk_rk", "_tk_salt")
-    )
-    w2 = Window.partitionBy(q_id_col).orderBy(*order)
-    return (
-        survivors.withColumn(rank_col, F.row_number().over(w2))
-        .where(F.col(rank_col) <= k)
-    )
+    w = Window.partitionBy(q_id_col).orderBy(F.col(score_col).desc(), F.col(id_col).asc())
+    return scored.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
 
 
 def unit_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -91,12 +74,6 @@ def unit_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         return pd.Series(list(m))
 
     return df.withColumn(vec_col, _unit(F.col(vec_col)))
-
-
-def with_cosine(df: DataFrame, vec_a: str, vec_b: str, out: str = "cosine") -> DataFrame:
-    """cosine(a,b) as pure Column math (JVM, codegen)."""
-    a, b = F.col(vec_a), F.col(vec_b)
-    return df.withColumn(out, _dot(a, b) / (_norm(a) * _norm(b)))
 
 
 def brute_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
@@ -588,10 +565,11 @@ def ann_topk_pq(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     approximate cosine is exact-up-to-quantization because both sides
     are unit-normalized (corpus at encode time, query at LUT build).
 
-    Stage 2: the per-query candidate ``pool`` (salted two-phase
-    top-``pool`` on the ADC score) JOINS BACK to the vector store by id
-    for the exact double cosine — the scan pass never carries the float
-    vectors, and the join-back probe side is ≤ pool·|queries| rows, so
+    Stage 2: the per-query candidate ``pool`` (one bounded
+    ``row_number() <= pool`` window on the ADC score) JOINS BACK to the
+    vector store by id for the exact double cosine — the scan pass never
+    carries the float vectors, and the join-back probe side is
+    ≤ pool·|queries| rows, so
     AQE broadcasts it into the store scan.  Final ranks use the same
     expression as :func:`brute_topk`: results hash-match the
     brute-force oracle whenever the ADC pool retains the true top-k."""
@@ -727,8 +705,8 @@ def ann_topk_ivf_int8(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     2. **int8 coarse scoring**: the surviving candidates are scored with
        the integer dot product over per-row symmetric int8 quantization
        — the scan-side column is 4-8× narrower than the float vector —
-       and a salted two-phase top-``pool`` keeps a bounded pool per
-       query.
+       and one ``row_number() <= pool`` window (bounded by Catalyst's
+       partial ``WindowGroupLimit``) keeps a pool per query.
     3. **exact rerank**: the pool (≤ pool rows/query) is rescored with
        the exact double cosine; final ranks use the same expression as
        :func:`brute_topk`, so results hash-match the brute-force oracle

@@ -442,7 +442,7 @@ def heavy_hitters_exact(df: DataFrame, col: str, threshold: float,
 
 
 def kmv_registers(df: DataFrame, group_cols: list[str], value_col: str,
-                  k: int = 256, salts: int = 16) -> DataFrame:
+                  k: int = 256) -> DataFrame:
     """KMV sketch per group: the ``k`` smallest DISTINCT 60-bit hashes
     of ``value_col``, as rows (group, rank, h) — the order-statistics
     cousin of the HLL registers whose extra power is SET ALGEBRA: two
@@ -452,11 +452,11 @@ def kmv_registers(df: DataFrame, group_cols: list[str], value_col: str,
 
     Mergeable by construction (k smallest of a union = k smallest of
     the per-part k-smallest).  Shape: one map-side-combinable dedup
-    exchange on (group, hash), then the engine's salted two-phase k-min
-    — local k-min per (group, salt), global k-min over k·salts
-    survivors — so a billion-token group never funnels through one
-    sorting task.  Hash is the md5-60-bit idiom: every register replays
-    bit-exactly in DuckDB.
+    exchange on (group, hash), then one ``row_number() <= k`` window per
+    group, which Catalyst bounds with a partial ``WindowGroupLimit``
+    before its exchange and a final one after — so a billion-token group
+    never funnels through one sorting task.  Hash is the md5-60-bit
+    idiom: every register replays bit-exactly in DuckDB.
     """
     if k < 2:
         raise ValueError(f"kmv_registers: k must be >= 2, got {k}")
@@ -465,17 +465,9 @@ def kmv_registers(df: DataFrame, group_cols: list[str], value_col: str,
         df.select(*group_cols, h.alias("h"))
         .groupBy(*group_cols, "h").agg(F.lit(1).alias("_one")).drop("_one")
     )
-    salt = F.pmod(F.col("h"), F.lit(salts))
-    w1 = Window.partitionBy(*group_cols, "_s").orderBy(F.asc("h"))
-    survivors = (
-        distinct.withColumn("_s", salt)
-        .withColumn("_rk", F.row_number().over(w1))
-        .where(F.col("_rk") <= k)
-        .drop("_rk", "_s")
-    )
-    w2 = Window.partitionBy(*group_cols).orderBy(F.asc("h"))
+    w = Window.partitionBy(*group_cols).orderBy(F.asc("h"))
     return (
-        survivors.withColumn("rank", F.row_number().over(w2))
+        distinct.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(*group_cols, "rank", "h")
     )

@@ -156,10 +156,10 @@ def prepare_zones(zones: DataFrame, res: int = DEFAULT_RES):
     """Zone polygons → (zone_cells DataFrame, {zone_id: rings} dict),
     prepared on the DRIVER (zones collected).
 
-    Used only by callers that need the ring_map dict for a broadcast
-    pandas-UDF refine (``refine='pandas'``, geometry_join).  The default
-    Column-refine join path uses :func:`prepare_zones_distributed`, which
-    never touches the driver — prefer that for large zone sides.
+    The 'broadcast' join uses only the zone_cells; the ring_map dict
+    serves driver-side checks against the numpy kernels.  The 'shuffle'
+    join uses :func:`prepare_zones_distributed`, which never touches the
+    driver — prefer that for large zone sides.
     """
     spark = zones.sparkSession
     rows = zones.collect()
@@ -265,16 +265,6 @@ def prepare_zones_distributed(zones: DataFrame, res: int = DEFAULT_RES) -> DataF
     )
 
 
-def _rings_from_row(ext, ints) -> list[np.ndarray]:
-    """Arrow-decoded ring columns (list of {x,y} structs / list of lists)
-    → [exterior, *interiors] as (n,2) float64 arrays, for refine UDFs
-    that receive zone rings ON THE JOIN ROW instead of a broadcast dict."""
-    rings = [np.array([[p["x"], p["y"]] for p in ext], dtype=np.float64)]
-    for hole in (ints if ints is not None else []):
-        rings.append(np.array([[p["x"], p["y"]] for p in hole], dtype=np.float64))
-    return rings
-
-
 def flat_ring_cols(ext_col, int_col):
     """(exterior array<struct<x,y>>, interiors) → (array<double>,
     array<array<double>>) flattened [x0,y0,x1,y1,…] Column expressions.
@@ -298,36 +288,6 @@ def _rings_from_flat(ext, ints) -> list[np.ndarray]:
     return rings
 
 
-def _pip_refine_udf(ring_map_bc):
-    """Vectorized crossing-number refine: (lon, lat, zone_id, full) → bool.
-
-    ``full=true`` rows (cell entirely inside the polygon) short-circuit to
-    true without touching the kernel; the rest are grouped by zone via
-    integer ``factorize`` codes (string equality per zone over the whole
-    batch was the hot spot) and tested batch-wise in numpy.
-    """
-
-    @F.pandas_udf(T.BooleanType())
-    def pip(lon: pd.Series, lat: pd.Series, zone_id: pd.Series, full: pd.Series) -> pd.Series:
-        rings_by_zone = ring_map_bc.value
-        fullv = full.to_numpy(dtype=bool)
-        out = fullv.copy()
-        todo = np.nonzero(~fullv)[0]
-        if len(todo):
-            lon_np = lon.to_numpy(dtype=np.float64)[todo]
-            lat_np = lat.to_numpy(dtype=np.float64)[todo]
-            codes, uniques = pd.factorize(zone_id.to_numpy()[todo])
-            for k, z in enumerate(uniques):
-                rings = rings_by_zone.get(z)
-                if rings is None:
-                    continue
-                m = codes == k
-                out[todo[m]] = geom_k.points_in_polygon(lon_np[m], lat_np[m], rings)
-        return pd.Series(out)
-
-    return pip
-
-
 # ---------------------------------------------------------------------------
 # The join
 # ---------------------------------------------------------------------------
@@ -343,7 +303,6 @@ def spatial_join(
     hot_cell_threshold: int = 200_000,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    refine: str = "column",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """docs(points) ⋈ zones(polygons) under a spatial predicate.
@@ -366,30 +325,27 @@ def spatial_join(
     :func:`prepare_zones`: a side small enough to broadcast to every
     executor is by definition driver-sized, and the driver path keeps the
     flagship plan 100% JVM (no Arrow eval anywhere — asserted in
-    tests/test_plans_bucketing.py).  ``refine='pandas'`` also needs the
-    driver path for its broadcast ring dict.
+    tests/test_plans_bucketing.py).
     """
-    spark = docs.sparkSession
-    if refine == "column" and strategy == "shuffle":
-        zone_cells = prepare_zones_distributed(zones, res)
-        ring_bc = None
-    else:
-        zone_cells, ring_map = prepare_zones(zones, res)
-        ring_bc = spark.sparkContext.broadcast(ring_map)
-
-    pts = docs if "cell_id" in docs.columns else tile_assign(docs, res, lon_col, lat_col)
-
     if predicate == "disjoint":
-        matched = spatial_join(
-            docs, zones, res, strategy, "intersects", salt, hot_cell_threshold,
-            lon_col, lat_col,
-        )
         if id_col not in docs.columns:
             raise ValueError(
                 f"disjoint anti-join needs a unique id column; {id_col!r} "
                 f"not in {docs.columns}"
             )
+        matched = spatial_join(
+            docs, zones, res=res, strategy=strategy, predicate="intersects",
+            salt=salt, hot_cell_threshold=hot_cell_threshold,
+            lon_col=lon_col, lat_col=lat_col, id_col=id_col,
+        )
         return docs.join(matched.select(id_col).distinct(), id_col, "left_anti")
+
+    if strategy == "shuffle":
+        zone_cells = prepare_zones_distributed(zones, res)
+    else:
+        zone_cells, _ = prepare_zones(zones, res)
+
+    pts = docs if "cell_id" in docs.columns else tile_assign(docs, res, lon_col, lat_col)
 
     if strategy == "broadcast":
         joined = pts.join(F.broadcast(zone_cells), "cell_id", "inner")
@@ -405,9 +361,11 @@ def spatial_join(
                 .collect()
             ]
             if hot:
-                salts = spark.range(salt).select(F.col("id").cast("int").alias("salt"))
+                salt_ids = docs.sparkSession.range(salt).select(
+                    F.col("id").cast("int").alias("salt")
+                )
                 zc_hot = (
-                    zone_cells.where(F.col("cell_id").isin(hot)).crossJoin(salts)
+                    zone_cells.where(F.col("cell_id").isin(hot)).crossJoin(salt_ids)
                 )
                 zc_cold = zone_cells.where(~F.col("cell_id").isin(hot)).withColumn(
                     "salt", F.lit(0)
@@ -428,20 +386,13 @@ def spatial_join(
     else:
         raise ValueError(f"unknown strategy: {strategy}")
 
-    if refine == "column":
-        # JVM fast path: crossing-number as whole-stage-codegen'd Column
-        # math over the rings shipped on the broadcast side — no Python,
-        # no Arrow, in the 10^12-doc hot loop.
-        pip_col = point_in_polygon_col(
-            F.col(lon_col), F.col(lat_col), F.col("exterior"), F.col("interiors")
-        )
-        refined = joined.where(F.col("full") | pip_col)
-    else:
-        pip = _pip_refine_udf(ring_bc)
-        refined = joined.where(
-            pip(F.col(lon_col), F.col(lat_col), F.col("zone_id"), F.col("full"))
-        )
-    return refined.drop("full", "exterior", "interiors")
+    # crossing-number as whole-stage-codegen'd Column math over the rings
+    # shipped on the zone side — no Python, no Arrow, in the 10^12-doc
+    # hot loop
+    pip_col = point_in_polygon_col(
+        F.col(lon_col), F.col(lat_col), F.col("exterior"), F.col("interiors")
+    )
+    return joined.where(F.col("full") | pip_col).drop("full", "exterior", "interiors")
 
 
 def dwithin_zone_join(

@@ -183,7 +183,6 @@ def stratified_topk(
     k: int,
     id_col: str = "doc_id",
     buckets: int = 10_000,
-    salts: int = 16,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic per-stratum sample: the ``k`` rows with the smallest
@@ -191,29 +190,17 @@ def stratified_topk(
     ``sample_rank``).  Re-runnable and layout-independent, unlike
     ``sampleBy``.
 
-    Two-phase top-k: a first window over ``(stratum, salt)`` keeps k
-    rows per salt — every member of the true per-stratum top-k survives
-    its own salt's cut, so phase 2's exact window sees at most
-    ``k * salts`` rows per stratum instead of the whole stratum.  With a
-    handful of strata over 100 TB a single per-stratum window would
-    funnel the entire corpus through a few partitions; the salted phase
-    bounds each window partition, and the result is provably identical
-    for ANY salts >= 1 (salts is purely a parallelism knob).
+    One ``row_number() <= k`` window per stratum: Catalyst plans it as a
+    partial ``WindowGroupLimit`` below the exchange and a final one above
+    it, so even a stratum holding most of the corpus ships at most k rows
+    per input partition and no task sorts the whole stratum.
     """
     bucket = _id_bucket(id_col, buckets, hash_fn)
-    salt = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(1)), F.lit(salts))
-    staged = df.withColumn("sample_bucket", bucket).withColumn("_salt", salt)
-    w1 = Window.partitionBy(strata_col, "_salt").orderBy("sample_bucket", id_col)
-    survivors = (
-        staged.withColumn("_rk1", F.row_number().over(w1))
-        .where(F.col("_rk1") <= k)
-        .drop("_rk1")
-    )
-    w2 = Window.partitionBy(strata_col).orderBy("sample_bucket", id_col)
+    w = Window.partitionBy(strata_col).orderBy("sample_bucket", id_col)
     return (
-        survivors.withColumn("sample_rank", F.row_number().over(w2))
+        df.withColumn("sample_bucket", bucket)
+        .withColumn("sample_rank", F.row_number().over(w))
         .where(F.col("sample_rank") <= k)
-        .drop("_salt")
     )
 
 

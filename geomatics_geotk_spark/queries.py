@@ -2280,12 +2280,12 @@ ORACLE_URL_DOMAINS = (
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-language sample: the 20 docs with the smallest
-    (md5-bucket, doc_id) per lang.  Salted two-phase top-k — the salt
-    bounds every window partition to <= k rows per salt regardless of
-    stratum size, and the row set is provably salt-invariant (the oracle
-    computes the direct single-window top-k)."""
+    (md5-bucket, doc_id) per lang.  One ``row_number() <= k`` window per
+    lang; its partial ``WindowGroupLimit`` ships at most k rows per lang
+    per input partition regardless of stratum size (the oracle computes
+    the same single-window top-k)."""
     docs = _read(spark, sf_dir, "documents").select("doc_id", "lang")
-    out = text.stratified_topk(docs, "lang", k=20, hash_fn="md5", salts=8)
+    out = text.stratified_topk(docs, "lang", k=20, hash_fn="md5")
     return out.select(
         "lang", "doc_id", "sample_bucket",
         F.col("sample_rank").cast("long").alias("sample_rank"),
@@ -2594,7 +2594,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned, _ = clustering.kmeans(emb, k=4, iters=3)
     out = text.stratified_topk(
         assigned.select("vec_id", "cluster"), "cluster", k=10,
-        id_col="vec_id", hash_fn="md5", salts=8,
+        id_col="vec_id", hash_fn="md5",
     )
     return out.select(
         "cluster", "vec_id", "sample_bucket",
@@ -3828,7 +3828,7 @@ ORACLE_CRS_DOMAIN = (
 
 def q_pip_salted_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same join as pip_convex but through the shuffle path with explicit
-    hot-cell salting (threshold forced low so every busy cell salts) —
+    hot-cell salting (threshold forced low so every busy cell is salted) —
     the north-rule skew machinery, verified against the identical oracle
     row set as the broadcast plan."""
     pts = _pts_from_key(_read(spark, sf_dir, "orders"), "o_orderkey")
@@ -7325,8 +7325,9 @@ def q_kmv_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     reported against the exact distinct count, the HLL-twin pattern
     with the sketch that additionally supports set intersection.
     Registers are the k smallest md5-60 hashes (bit-exact in DuckDB);
-    the salted two-phase k-min keeps a mega-vocabulary group off a
-    single sorting task; the estimator (k−1)/θ̂ runs over ≤ k rows per
+    the bounded ``row_number() <= k`` window (partial + final
+    ``WindowGroupLimit``) keeps a mega-vocabulary group off a single
+    sorting task; the estimator (k−1)/θ̂ runs over ≤ k rows per
     group."""
     from .operators import sketches
 
@@ -9171,7 +9172,8 @@ def q_idw_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IDW spatial interpolation (``interpolate.idw_interpolate``):
     estimate a per-doc field value from the 4 nearest POIs, weighted
     1e6/d² with a 1 m exact-hit floor.  Candidates via broadcast POI
-    dim + the salted two-phase top-k (never a one-task-per-doc window);
+    dim + one bounded per-doc ``row_number() <= k`` window (its partial
+    ``WindowGroupLimit`` runs before the exchange);
     the scaled weights make every DECIMAL(38,30) cast exact for any
     Earth distance, so the sums are order-independent and the oracle
     (same ranking + same weight algebra in SQL) is hash-exact.  POI

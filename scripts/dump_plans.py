@@ -215,12 +215,10 @@ substring greps):
 - `decontaminate` / `curation_funnel`'s contamination stage: eval-side
   distinct shingles are benchmark-sized → **BroadcastHashJoin**; the
   corpus aggregates once on doc_id.  No SortMergeJoin anywhere.
-- `stratified_sample`: two Window nodes — the first partitions on
-  (stratum, salt) so no window partition exceeds the salt shard, the
-  second ranks the ≤ k·salts survivors per stratum.  Salt count is a
-  parallelism knob only; the row set is provably invariant (tested at
-  salts ∈ {1, 8} and oracle-checked against the direct single-window
-  top-k).
+- `stratified_sample`: one Window over one exchange on the stratum,
+  with **WindowGroupLimit** below and above it — the exchange carries
+  ≤ k rows per (stratum, input partition), so no window partition is
+  stratum-sized (oracle-checked against the same single-window top-k).
 - `vocab_topk`: partial+final count around one exchange, then
   **WindowGroupLimit** above and below the rank exchange — Catalyst
   pushes the k=20 limit into the shuffle, so the rank exchange carries
@@ -310,9 +308,10 @@ substring greps):
         "IVF cell int (the bucketing layout of the stored table) and a "
         "4-8x-narrower int8 qvec; probed queries broadcast-join on cell "
         "(the corpus never shuffles), the int8 coarse score thins "
-        "candidates, and BOTH rankings are the salted two-phase top-k — "
-        "phase-1 windows partition on (q_id, _tk_salt) with "
-        "WindowGroupLimit, so no task ever sorts a query's whole "
+        "candidates, and BOTH rankings are one row_number() <= k window "
+        "on q_id — the pool ranking's exchange carries a partial "
+        "WindowGroupLimit below and a final one above, and the rerank "
+        "reuses that partitioning, so no task ever sorts a query's whole "
         "candidate set (tests/test_plans_similarity.py asserts every "
         "ANN-family plan).",
         _trim(plans.formatted_plan(queries.q_ann_topk_ivf_int8(spark, SF)), 40),
@@ -327,7 +326,7 @@ substring greps):
         "constant-size encode/LUT Arrow batches).  The exact rerank "
         "JOINS BACK to the vector store by id for the pool rows only, "
         "so the wide float column is read for ≤ pool·Q rows; both "
-        "rankings are the salted two-phase top-k.  ann_topk_ivf_pq "
+        "rankings are one bounded row_number() <= k window.  ann_topk_ivf_pq "
         "composes the same ADC stage behind IVF cell pruning — the "
         "FAISS IVFx,PQy layout where the stored table is bucketed by "
         "cell and carries (id, cell, codes).",
@@ -392,7 +391,8 @@ substring greps):
     sections.append((
         "IDW interpolation (idw_interpolate)",
         "Broadcast observation dim (BroadcastNestedLoopJoin at dim size) "
-        "→ salted two-phase top-k (never one task per doc) → decimal "
+        "→ one row_number() <= k window per doc, with a partial "
+        "WindowGroupLimit before its exchange (never one task per doc) → decimal "
         "weight rollup reusing the ranking exchange.  Corpus-scale "
         "observation tables swap the candidate stage for knn_join's "
         "cell-ring equi-join and keep the same weighting tail.",
@@ -438,8 +438,9 @@ substring greps):
 
     sections.append((
         "KMV registers + estimate (kmv_vocab)",
-        "One dedup exchange on (group, hash), salted two-phase k-min "
-        "(no single-task sort per group), estimator over ≤ k rows per "
+        "One dedup exchange on (group, hash), then one k-min window "
+        "bounded by a partial + final WindowGroupLimit around its "
+        "exchange (no single-task sort per group), estimator over ≤ k rows per "
         "group; the exact-distinct comparison side is its own branch.",
         _trim(plans.formatted_plan(queries.q_kmv_vocab(spark, SF)), 40),
     ))

@@ -7,8 +7,8 @@ round-1 driver-side loops.
   strategy) and matches a numpy brute-force truth on sampled docs;
 - prepare_zones_distributed emits the identical (cell_id, zone_id, full)
   row set as the driver-side prepare_zones;
-- spatial_join through the distributed prep returns the same rows as
-  through the driver-side prep.
+- spatial_join(predicate='disjoint') rejects a missing id column before
+  it prepares any zone (no Spark job).
 """
 
 import numpy as np
@@ -97,17 +97,19 @@ def test_prepare_zones_distributed_equals_driver(spark):
             assert len(r["exterior"]) >= 4
 
 
-def test_spatial_join_same_rows_both_preps(spark):
-    docs = sj.tile_assign(
-        sj.decode_geo_spans(synth_documents(spark, 1500)), 12
-    )
-    zones = zones_table(spark, grid=8).where(F.col("zone_id").startswith("zone-grid-"))
-    col_path = sj.spatial_join(docs, zones, res=12, strategy="broadcast")
-    pd_path = sj.spatial_join(docs, zones, res=12, strategy="broadcast", refine="pandas")
-    a = {(r["doc_id"], r["zone_id"]) for r in col_path.select("doc_id", "zone_id").collect()}
-    b = {(r["doc_id"], r["zone_id"]) for r in pd_path.select("doc_id", "zone_id").collect()}
-    assert a == b
-    assert len(a) > 0
+def test_disjoint_without_id_fails_before_any_job(spark):
+    """The id check comes before zone preparation: the repartitioned
+    zones need a job to collect, and none may run."""
+    docs = spark.createDataFrame([(-123.1, 49.2)], "lon double, lat double")
+    zones = zones_table(spark, grid=2).repartition(2)
+    sc = spark.sparkContext
+    sc.setJobGroup("disjoint_no_id", "disjoint join without an id column")
+    try:
+        with pytest.raises(ValueError, match="unique id column"):
+            sj.spatial_join(docs, zones, predicate="disjoint")
+        assert list(sc.statusTracker().getJobIdsForGroup("disjoint_no_id")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_dwithin_zone_join_vs_brute_force_pentagon(spark):

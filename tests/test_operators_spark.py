@@ -3,6 +3,8 @@ decode → tile → joins, cross-checked against brute-force numpy truth, with
 the span-sequence invariant asserted after every pipeline.
 """
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -484,13 +486,13 @@ class TestBeyond:
 
 
 class TestSimilarityR5:
-    """Round-5 scale/recall contracts: salted two-phase top-k exactness
-    and the adversarial (rotated, non-direction-identical) near-dup
+    """Round-5 scale/recall contracts: per-query top-k exactness and the
+    adversarial (rotated, non-direction-identical) near-dup
     fixture."""
 
     def test_topk_salt_invariance(self, spark):
-        """_topk_per_query is EXACT for any salts >= 1: the salt count is
-        a parallelism knob, never a semantics knob."""
+        """_topk_per_query is EXACT: per query, the 5 highest scores
+        ranked (score desc, id asc), checked against a Python ranking."""
         scored = (
             spark.range(500)
             .select(
@@ -499,17 +501,19 @@ class TestSimilarityR5:
                 (F.sin(F.col("id").cast("double")) * 100).alias("cosine"),
             )
         )
-        outs = []
-        for salts in (1, 4, 16):
-            out = similarity._topk_per_query(
-                scored, 5, "q_id", "vec_id", salts=salts
+        out = similarity._topk_per_query(scored, 5, "q_id", "vec_id")
+        got = sorted((r["q_id"], r["rank"], r["vec_id"]) for r in out.collect())
+        expected = sorted(
+            (q, rank, v)
+            for q in range(7)
+            for rank, v in enumerate(
+                sorted((v for v in range(500) if v % 7 == q),
+                       key=lambda v: (-math.sin(v), v))[:5],
+                start=1,
             )
-            outs.append(sorted(
-                (r["q_id"], r["rank"], r["vec_id"], round(r["cosine"], 9))
-                for r in out.collect()
-            ))
-        assert outs[0] == outs[1] == outs[2]
-        assert len(outs[0]) == 35  # 7 queries x top-5
+        )
+        assert got == expected
+        assert len(got) == 35  # 7 queries x top-5
 
     def test_ann_ivf_int8_full_probe_equals_brute(self, spark):
         """nprobe = n_centroids + pool >= corpus: the composed path MUST

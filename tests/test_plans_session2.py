@@ -7,8 +7,9 @@ plan, so a Spark upgrade or refactor can't silently regress them.
   without the semi-join prefilter below it).
 - fuzzy_name_pairs: the pair dedup is the map-side array filter — no
   dropDuplicates exchange; the levenshtein refine stays JVM.
-- kmv_vocab: the two-phase k-min never plans a single-partition sort
-  (every Sort/Window is preceded by a hash partition on the group).
+- kmv_vocab: the k-min window never plans a single-partition sort
+  (every Sort/Window is preceded by a hash partition on the group) and
+  carries a partial WindowGroupLimit below its exchange.
 - track_cells / map_match: map-only Column math — no Python, and for
   map_match no higher-order-function lambda (the unrolled array_min).
 - grid_clusters: the point labeling join carries no Python either side.
@@ -17,6 +18,8 @@ plan, so a Spark upgrade or refactor can't silently regress them.
 from __future__ import annotations
 
 import re
+
+from conftest import assert_bounded_rankings
 
 from geomatics_geotk_spark import plans, queries
 
@@ -60,10 +63,12 @@ class TestSession2Plans:
         df = queries.q_kmv_vocab(spark, SF)
         plan = plans.formatted_plan(df)
         assert _no_python(plan)
-        # every exchange in the two-phase k-min hashes on a key set
-        # that includes the group (lang) — a SinglePartition exchange
-        # would mean the window funneled to one task
+        # every exchange hashes on a key set that includes the group
+        # (lang) — a SinglePartition exchange would mean the window
+        # funneled to one task — and the k-min window is bounded by a
+        # partial + final WindowGroupLimit around its one exchange
         assert "SinglePartition" not in plan
+        assert_bounded_rankings(plan, 1)
 
     def test_track_cells_map_only_generate(self, spark):
         df = queries.q_track_cells(spark, SF)

@@ -1,14 +1,19 @@
 """Plan-hygiene asserts for the ANN family (r4 verdict item 1): every
-per-query ranking must be the salted two-phase top-k — phase 1 windows
-over (q_id, _tk_salt) so no single task ever sorts a query's full
-candidate set, phase 2 sorts at most k·salts survivors per query.
+per-query ranking must be one ``row_number() <= k`` window that Catalyst
+bounds with a partial WindowGroupLimit below its exchange and a final one
+above it, so no single task ever sorts a query's full candidate set.
 """
 
 from __future__ import annotations
 
 import re
 
+import pytest
+from conftest import assert_bounded_rankings
+from pyspark.sql import functions as F
+
 from geomatics_geotk_spark import plans, queries
+from geomatics_geotk_spark.operators import similarity
 
 SF = "/root/testdata/sf0.001"
 
@@ -17,27 +22,25 @@ def _nodes(plan: str, name: str) -> int:
     return len(re.findall(rf"\(\d+\) {name}", plan))
 
 
-def _window_specs(plan: str) -> list[str]:
-    """The partitionBy argument lists of every Window node, in plan
-    order (formatted explain prints them in the node detail section)."""
-    return re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-
-
 class TestAnnPlans:
     def _assert_two_phase(self, df, n_rankings: int):
-        """Every ranking = (salted window, exact window) pair; every
-        SALTED window's partition spec carries _tk_salt, so the biggest
-        window partition is bounded by the per-(q_id, salt) candidate
-        slice, never a query's whole candidate set.  The row_number
-        filter must also reach the window as a WindowGroupLimit, so each
-        partition keeps a k-row heap instead of a full sort."""
-        plan = plans.formatted_plan(df)
-        specs = _window_specs(plan)
-        salted = [s for s in specs if "_tk_salt" in s]
-        exact = [s for s in specs if "_tk_salt" not in s]
-        assert len(specs) == 2 * n_rankings, specs
-        assert len(salted) == n_rankings and len(exact) == n_rankings, specs
-        assert _nodes(plan, "WindowGroupLimit") >= n_rankings, plan
+        """Partial + final WindowGroupLimit around one window exchange
+        (conftest.assert_bounded_rankings); a rerank over the pool's
+        q_id partitioning reuses that exchange."""
+        assert_bounded_rankings(plans.formatted_plan(df), n_rankings)
+
+    def test_partial_limit_required(self, spark):
+        """The assert holds at k = windowGroupLimitThreshold (1000) and
+        fails at k = 1001, where Catalyst plans no WindowGroupLimit and
+        the exchange ships every candidate."""
+        scored = spark.range(5000).select(
+            (F.col("id") % 7).alias("q_id"),
+            F.col("id").alias("vec_id"),
+            F.sin(F.col("id").cast("double")).alias("cosine"),
+        )
+        self._assert_two_phase(similarity._topk_per_query(scored, 1000, "q_id", "vec_id"), 1)
+        with pytest.raises(AssertionError):
+            self._assert_two_phase(similarity._topk_per_query(scored, 1001, "q_id", "vec_id"), 1)
 
     def test_cosine_topk_two_phase(self, spark):
         self._assert_two_phase(queries.q_cosine_topk(spark, SF), 1)
@@ -73,8 +76,6 @@ class TestSemanticDedupPlan:
         FlatMapGroupsInPandas pair stage, and NO join — the rejected
         self-join shapes (PLANS.md) had two exchanges and re-evaluated
         the k-means assignment folds in a pushed-down isnotnull filter."""
-        from geomatics_geotk_spark.operators import similarity
-
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
         plan = plans.formatted_plan(
             similarity.semantic_dedup(emb, k=4, iters=3, threshold=0.95)

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import re
 
+from conftest import assert_bounded_rankings
+
 from geomatics_geotk_spark import plans, queries
 
 SF = "/root/testdata/sf0.001"
@@ -115,12 +117,13 @@ class TestTextPlans:
         assert _nodes(plan, "WindowGroupLimit") >= 1
 
     def test_stratified_sample_bounded_windows(self, spark):
-        """Two window exchanges (salted partial + final) and nothing
-        Python; the first window partitions on (lang, salt) so no
-        stratum-sized partition exists."""
+        """One window exchange between a partial and a final
+        WindowGroupLimit, and nothing Python: the exchange ships at most
+        k rows per lang per input partition, so no stratum-sized
+        partition exists."""
         plan = plans.formatted_plan(queries.q_stratified_sample(spark, SF))
         assert _no_python(plan)
-        assert plan.count("Window") >= 2
+        assert_bounded_rankings(plan, 1)
 
     def test_chunk_sliding_zero_shuffle_jvm(self, spark):
         """Context packing is per-row math + a narrow explode: no
