@@ -1,21 +1,24 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship interleaved-document spatial pipeline
-on sf0.001; ``queries()``/``oracle_sql()`` expose every implemented
-operator from SURVEY.md §2 (plus the training-data operators) with DuckDB
-oracles wherever SQL-expressible.  Implementations live in
-``geomatics_geotk_spark.queries``.
+on sf0.001; ``queries()``/``oracle_sql()`` project
+``geomatics_geotk_spark.queries.CATALOG``: every implemented operator
+from SURVEY.md §2 (plus the training-data operators), each with its
+DuckDB oracle.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from geomatics_geotk_spark import queries as _q  # noqa: E402
 
@@ -43,8 +46,21 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(_q.QUERIES)
+    """Every catalog query, oldest correctness record first.
+
+    A name's age is the highest N whose ``CORRECTNESS_r{N}.json`` (next
+    to this file) has a row for it, 0 if none does.  The sort is stable,
+    so ties keep catalog order; a correctness pass that stops after the
+    first few dozen entries rechecks the stalest queries."""
+    ages: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
+        n = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
+        with open(path) as f:
+            for name in json.load(f):
+                ages[name] = max(ages.get(name, 0), n)
+    names = sorted(_q.CATALOG, key=lambda name: ages.get(name, 0))
+    return {name: _q.CATALOG[name][0] for name in names}
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(_q.ORACLES)
+    return {name: sql for name, (_, sql) in _q.CATALOG.items()}

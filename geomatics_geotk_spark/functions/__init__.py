@@ -75,15 +75,6 @@ def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# BBOX predicate — SpatialAssert.java:39-67 (interval overlap per dimension)
-# ---------------------------------------------------------------------------
-
-
-def bbox_intersects(a_xmin, a_ymin, a_xmax, a_ymax, b_xmin, b_ymin, b_xmax, b_ymax) -> Column:
-    return (a_xmin <= b_xmax) & (a_xmax >= b_xmin) & (a_ymin <= b_ymax) & (a_ymax >= b_ymin)
-
-
-# ---------------------------------------------------------------------------
 # Point-in-polygon as pure Column math (JVM higher-order functions)
 # ---------------------------------------------------------------------------
 
@@ -321,15 +312,6 @@ def round_down_2dp(x: Column) -> Column:
     ceil for negatives."""
     scaled = x * F.lit(100.0)
     return F.when(x >= 0, F.floor(scaled)).otherwise(F.ceil(scaled)) / F.lit(100.0)
-
-
-def envelope_as_gml_pos(xmin, ymin, xmax, ymax) -> Column:
-    """gml:Envelope lowerCorner/upperCorner text with 2dp-DOWN ordinates."""
-    return F.format_string(
-        "<gml:Envelope><gml:lowerCorner>%s %s</gml:lowerCorner><gml:upperCorner>%s %s</gml:upperCorner></gml:Envelope>",
-        round_down_2dp(xmin).cast("string"), round_down_2dp(ymin).cast("string"),
-        round_down_2dp(xmax).cast("string"), round_down_2dp(ymax).cast("string"),
-    )
 
 
 # ---------------------------------------------------------------------------

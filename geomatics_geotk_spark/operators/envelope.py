@@ -38,23 +38,6 @@ def envelope_agg(df: DataFrame, group_cols: list[str] | None = None,
     return df.agg(*aggs)
 
 
-def envelope_agg_boxes(df: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Union (coalesce) of envelope rows (xmin/ymin/xmax/ymax columns).
-
-    Reference: Extents.coalesceBoundingBoxes (Extents.java:258-274) — the
-    caller harmonizes CRS first (all engine envelopes are CRS:84 lon/lat).
-    """
-    aggs = [
-        F.min("xmin").alias("xmin"),
-        F.min("ymin").alias("ymin"),
-        F.max("xmax").alias("xmax"),
-        F.max("ymax").alias("ymax"),
-    ]
-    if group_cols:
-        return df.groupBy(*group_cols).agg(*aggs)
-    return df.agg(*aggs)
-
-
 def coalesce_boxes_cross_crs(df: DataFrame, group_col: str = "grp",
                              id_col: str = "doc_id") -> DataFrame:
     """Cross-CRS coalesceBoundingBoxes (``Extents.java:258-274``): union

@@ -5,7 +5,10 @@ the knn_join no-doc-side-broadcast scale guarantee (r3 verdict items
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 
 import pytest
@@ -32,6 +35,21 @@ class TestCatalog:
     def test_every_query_callable_and_named(self):
         for name, fn in entrymod.queries().items():
             assert callable(fn), name
+
+    def test_stalest_correctness_rows_first(self):
+        """A correctness pass may check only about the first 50 entries, so
+        the order is by latest CORRECTNESS_r{N}.json row, never-checked
+        names first."""
+        root = os.path.dirname(os.path.abspath(entrymod.__file__))
+        ages: dict[str, int] = {}
+        for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+            n = int(re.search(r"_r(\d+)\.json$", path).group(1))
+            with open(path) as f:
+                for name in json.load(f):
+                    ages[name] = max(ages.get(name, 0), n)
+        order = [ages.get(name, 0) for name in entrymod.queries()]
+        assert order == sorted(order)
+        assert order[:50] == [0] * 50
 
 
 class TestPlantedFastTwins:

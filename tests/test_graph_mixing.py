@@ -117,7 +117,7 @@ def test_budget_pack_two_phase_equals_global_window(spark):
 def test_mix_resample_hits_target(spark):
     """A 10x-over-represented source is thinned toward the uniform
     target; an under-represented source keeps everything (cutoff 10000)."""
-    from geomatics_geotk_spark.queries import QUERIES
+    from geomatics_geotk_spark.queries import q_mix_resample
     import tempfile, os
 
     rows = [(i, "big" if i < 1000 else "small") for i in range(1100)]
@@ -126,7 +126,7 @@ def test_mix_resample_hits_target(spark):
         df.withColumn("text", F.lit("x")).write.parquet(
             os.path.join(td, "documents.parquet")
         )
-        out = {r["source"]: r for r in QUERIES["mix_resample"](spark, td).collect()}
+        out = {r["source"]: r for r in q_mix_resample(spark, td).collect()}
     # K = 550, uniform target = 275/source
     assert out["small"]["cutoff"] == 10000  # 100 < 275: keep all
     assert out["small"]["n_kept"] == 100
